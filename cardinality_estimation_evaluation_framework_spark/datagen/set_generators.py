@@ -36,23 +36,38 @@ DIRAC_MIXTURE_X = [0.065, 0.4274, 1.275, 3.140]
 def choice_fast(n, m: int, random_state: np.random.RandomState) -> np.ndarray:
     """Sample m without replacement in O(m) — Robert Floyd's algorithm
     (public: Bentley & Floyd, "A sample of brilliance", CACM 1987;
-    ref analogue: common/random.py:18-70, doc/choice_speedup.md)."""
+    ref analogue: common/random.py:18-70, doc/choice_speedup.md).
+
+    Step j draws d_j from [0, size-m+j] and keeps it unless it was already
+    chosen, in which case it takes r_j = size-m+j (never chosen before).
+    Resolved in numpy, O(m) memory: a repeated draw is always rejected; a
+    first occurrence v is rejected only if v = r_i for an earlier rejected
+    step i, a short chain resolved over just those steps. The Python set is
+    then built from the same insertion sequence, so its iteration order (the
+    output order) is the one a per-element ``set.add`` loop gives."""
     if isinstance(n, (int, np.integer)):
         size, pool = int(n), None
     else:
         pool = np.asarray(n)
         size = len(pool)
     assert m <= size, f"cannot sample {m} from {size}"
-    chosen: set[int] = set()
     # uniform draws scaled to the shrinking upper ranges, floored
     draws = (random_state.random_sample(m) * np.arange(size - m + 1, size + 1)).astype(
         np.int64
     )
-    for j in range(m):
-        t = int(draws[j])
-        if t in chosen:
-            t = size - m + j
-        chosen.add(t)
+    steps = np.arange(m, dtype=np.int64)
+    # repeated draws: sort on draw*m + step (no universe-sized scratch array)
+    value, step = np.divmod(np.sort(draws * m + steps), m)
+    rejected = np.zeros(m, dtype=bool)
+    rejected[step[1:][value[1:] == value[:-1]]] = True
+    src = draws - (size - m)  # the step whose replacement equals the draw
+    chained = np.flatnonzero(~rejected & (src >= 0) & (src < steps))
+    src = src[chained]
+    # each chained step copies an earlier step's verdict: iterate to the
+    # fixed point, one pass per link of the longest chain
+    while len(chained) and (rejected[chained] != rejected[src]).any():
+        rejected[chained] = rejected[src]
+    chosen = set(np.where(rejected, size - m + steps, draws).tolist())
     idx = np.fromiter(chosen, np.int64, m)
     return idx if pool is None else pool[idx]
 

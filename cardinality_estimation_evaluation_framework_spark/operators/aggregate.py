@@ -17,7 +17,7 @@ UDAFs, so it is built explicitly (SURVEY §4):
 
 Because every kernel's merge is associative + commutative, any partitioning
 and any tree shape produce bit-identical registers (tested in
-tests/test_associativity.py), mirroring the reference's merge contracts
+tests/test_property_merge.py), mirroring the reference's merge contracts
 (ref: any_sketch.py:36-105, hyper_log_log.py:217-246).
 
 Scale notes (100 TB posture):

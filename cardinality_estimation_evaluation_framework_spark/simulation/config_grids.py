@@ -44,14 +44,18 @@ from cardinality_estimation_evaluation_framework_spark.operators.set_ops import 
     ExpectationAdbfOperator,
     VocSetOperator,
 )
+from cardinality_estimation_evaluation_framework_spark.simulation.estimators import (
+    KERNEL_ESTIMATE,
+    UnionEstimator,
+    first_moment_estimator,
+    lossless_estimator,
+)
 from cardinality_estimation_evaluation_framework_spark.sketches.bloom import (
     BloomKernel,
     first_moment_estimate,
-    union_states,
 )
 from cardinality_estimation_evaluation_framework_spark.sketches.exact import (
     ExactMultiSetKernel,
-    lossless_estimate,
 )
 from cardinality_estimation_evaluation_framework_spark.sketches.hll import HllKernel
 from cardinality_estimation_evaluation_framework_spark.sketches.liquid_legions import (
@@ -470,18 +474,6 @@ def _blip_noiser(epsilon):
     return lambda kernel, state, rng: BlipNoiser(epsilon, rng)(state)
 
 
-def _adbf_estimator(method: str, sketch_epsilon: float | None):
-    """First-moment estimator with optional Surreal denoise of blipped states."""
-    denoiser = SurrealDenoiser(epsilon=sketch_epsilon) if sketch_epsilon else None
-
-    def estimator(kernel, states):
-        if denoiser is not None:
-            states = denoiser(states)
-        return [first_moment_estimate(kernel, union_states(kernel, states), method=method)]
-
-    return estimator
-
-
 def _adbf_config(sketch_name: str, dist_kind: str, method: str, length: int,
                  sketch_config: str, sketch_epsilon=None, estimate_epsilon=None,
                  estimate_delta=None, num_estimate_queries=None,
@@ -512,7 +504,8 @@ def _adbf_config(sketch_name: str, dist_kind: str, method: str, length: int,
         kernel_factory=(
             lambda seed, _k=dist_kind, _m=length, _p=dict(dist_params):
             BloomKernel(dist_kind=_k, m=_m, seed=seed, **_p)),
-        estimator=_adbf_estimator(method, sketch_epsilon),
+        estimator=first_moment_estimator(
+            method, SurrealDenoiser(epsilon=sketch_epsilon) if sketch_epsilon else None),
         sketch_noiser=_blip_noiser(sketch_epsilon) if sketch_epsilon else None,
         estimate_noiser=estimate_noiser,
     )
@@ -570,9 +563,19 @@ def hll_plus() -> SketchEstimatorConfig:
             sketch_config=str(HLL_PLUS_LENGTH),
             estimator_name="hll_cardinality"),
         kernel_factory=lambda seed: HllKernel(p=14, seed=seed),
-        estimator=lambda kernel, states: kernel.estimate(
-            _fold(kernel, states)),
+        estimator=KERNEL_ESTIMATE,
     )
+
+
+def _voc_laplace_noisers(sketch_epsilon, estimate_epsilon) -> dict:
+    """Laplace noise on the VoC counts (local DP) and on the estimate (global)."""
+    return dict(
+        sketch_noiser=(
+            (lambda kernel, state, rng: VocLaplaceNoiser(sketch_epsilon, rng)(state))
+            if sketch_epsilon else None),
+        estimate_noiser=(
+            (lambda rng: LaplaceEstimateNoiser(estimate_epsilon, rng))
+            if estimate_epsilon else None))
 
 
 def vector_of_counts_4096_sequential(sketch_epsilon=None, estimate_epsilon=None
@@ -585,12 +588,7 @@ def vector_of_counts_4096_sequential(sketch_epsilon=None, estimate_epsilon=None
             estimate_epsilon=estimate_epsilon),
         kernel_factory=lambda seed: VocKernel(num_buckets=4096, seed=seed),
         estimator=lambda kernel, states: [sequential_estimate(states)],
-        sketch_noiser=(
-            (lambda kernel, state, rng: VocLaplaceNoiser(sketch_epsilon, rng)(state))
-            if sketch_epsilon else None),
-        estimate_noiser=(
-            (lambda rng: LaplaceEstimateNoiser(estimate_epsilon, rng))
-            if estimate_epsilon else None),
+        **_voc_laplace_noisers(sketch_epsilon, estimate_epsilon),
     )
 
 
@@ -606,12 +604,7 @@ def independent_set_estimator_config(sketch_epsilon=None, estimate_epsilon=None
         kernel_factory=lambda seed: VocKernel(num_buckets=1, seed=seed),
         estimator=lambda kernel, states: IndependentSetEstimator(
             lambda sts: [sequential_estimate(sts)], UNIVERSE_SIZE_VALUE)(states),
-        sketch_noiser=(
-            (lambda kernel, state, rng: VocLaplaceNoiser(sketch_epsilon, rng)(state))
-            if sketch_epsilon else None),
-        estimate_noiser=(
-            (lambda rng: LaplaceEstimateNoiser(estimate_epsilon, rng))
-            if estimate_epsilon else None),
+        **_voc_laplace_noisers(sketch_epsilon, estimate_epsilon),
     )
 
 
@@ -626,20 +619,24 @@ def liquid_legions_sequential(flip_probability: float | None = None
     return SketchEstimatorConfig(
         name=f"liquid_legions-1e5_10-{noise_tag}-sequential",
         kernel_factory=lambda seed: LiquidLegionsKernel(a=10, m=10**5, seed=seed),
-        estimator=lambda kernel, states: kernel.estimate(_fold(kernel, states)),
+        estimator=KERNEL_ESTIMATE,
         sketch_noiser=noiser,
     )
+
+
+def _meta_voc_estimator(voc_length, sketch_epsilon):
+    def estimator(kernel, states):
+        noiser = (VocLaplaceNoiser(sketch_epsilon, np.random.RandomState())
+                  if sketch_epsilon else None)
+        return MetaVocEstimator(kernel, num_buckets=int(voc_length),
+                                meta_sketch_noiser=noiser)(states)
+
+    return estimator
 
 
 def meta_voc_for_exp_adbf(adbf_length, adbf_decay_rate, voc_length,
                           sketch_epsilon=None) -> SketchEstimatorConfig:
     """ref: evaluation_configs.py:1290-1329."""
-    def estimator(kernel, states, _eps=sketch_epsilon, _n=int(voc_length)):
-        noiser = (VocLaplaceNoiser(_eps, np.random.RandomState())
-                  if _eps else None)
-        return MetaVocEstimator(kernel, num_buckets=_n,
-                                meta_sketch_noiser=noiser)(states)
-
     return SketchEstimatorConfig(
         name=construct_sketch_estimator_config_name(
             sketch_name="exp_bloom_filter",
@@ -649,18 +646,12 @@ def meta_voc_for_exp_adbf(adbf_length, adbf_decay_rate, voc_length,
         kernel_factory=(
             lambda seed, _m=int(adbf_length), _d=adbf_decay_rate: BloomKernel(
                 dist_kind="exponential", m=_m, seed=seed, decay_rate=_d)),
-        estimator=estimator,
+        estimator=_meta_voc_estimator(voc_length, sketch_epsilon),
     )
 
 
 def meta_voc_for_bf(bf_length, voc_length, sketch_epsilon=None) -> SketchEstimatorConfig:
     """ref: evaluation_configs.py:1332-1364."""
-    def estimator(kernel, states, _eps=sketch_epsilon, _n=int(voc_length)):
-        noiser = (VocLaplaceNoiser(_eps, np.random.RandomState())
-                  if _eps else None)
-        return MetaVocEstimator(kernel, num_buckets=_n,
-                                meta_sketch_noiser=noiser)(states)
-
     return SketchEstimatorConfig(
         name=construct_sketch_estimator_config_name(
             sketch_name="bloom_filter", sketch_config=f"{bf_length}",
@@ -669,7 +660,7 @@ def meta_voc_for_bf(bf_length, voc_length, sketch_epsilon=None) -> SketchEstimat
         kernel_factory=(
             lambda seed, _m=int(bf_length): BloomKernel(
                 dist_kind="uniform", m=_m, seed=seed)),
-        estimator=estimator,
+        estimator=_meta_voc_estimator(voc_length, sketch_epsilon),
     )
 
 
@@ -877,7 +868,7 @@ def exact_multi_set_config(max_frequency) -> SketchEstimatorConfig:
             sketch_name="exact_multi_set", sketch_config="10000",
             estimator_name="lossless", max_frequency=str(int(max_frequency))),
         kernel_factory=lambda seed: ExactMultiSetKernel(),
-        estimator=lambda kernel, states: lossless_estimate(states, max_frequency),
+        estimator=lossless_estimator(max_frequency),
         max_frequency=max_frequency,
     )
 
@@ -887,8 +878,7 @@ def exp_same_key_aggregator_config(max_frequency, global_epsilon, length
     """ref: evaluation_configs.py:1655-1686."""
     noiser_class = GeometricEstimateNoiser if global_epsilon is not None else None
 
-    def estimator(kernel, states):
-        acc = _fold(kernel, states)
+    def finalize(kernel, acc):
         # split the budget between the 1+ reach and the histogram
         # (ref: same_key_aggregator.py StandardizedHistogramEstimator noisers)
         reach_noiser = hist_noiser = None
@@ -909,7 +899,7 @@ def exp_same_key_aggregator_config(max_frequency, global_epsilon, length
         kernel_factory=(
             lambda seed, _m=int(length): SameKeyAggregatorKernel(
                 m=_m, decay_rate=EXP_ADBF_DECAY_RATE, seed=seed)),
-        estimator=estimator,
+        estimator=UnionEstimator(finalize),
         max_frequency=max_frequency,
     )
 
@@ -947,13 +937,6 @@ def generate_frequency_estimator_configs(max_frequency: int
 # ---------------------------------------------------------------------------
 # Registry lookup (ref: evaluation_configs.py:784-813, 1730-1762)
 # ---------------------------------------------------------------------------
-
-def _fold(kernel, states):
-    acc = states[0]
-    for st in states[1:]:
-        acc = kernel.merge(acc, st)
-    return acc
-
 
 def get_estimator_configs_by_name(estimator_names: list[str], max_frequency: int
                                   ) -> list[SketchEstimatorConfig]:

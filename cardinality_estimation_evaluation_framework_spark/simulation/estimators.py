@@ -2,12 +2,23 @@
 (ref: src/evaluations/data/evaluation_configs.py:955-1762) re-expressed over
 kernels. Name grammar follows the reference convention
 ``sketch-config-estimator-localdp-globaldp`` (ref: evaluation_configs.py:893-952).
+
+Estimator contract: ``estimator(kernel, states) -> list[float]`` estimates
+the union of the states. A :class:`UnionEstimator` (fold, then finalize) also
+has ``prefixes(kernel, states)``: the estimates of every prefix
+``states[:i]`` from ONE left fold, k - 1 merges instead of k(k - 1)/2. The
+fold merges in the same order as the per-prefix fold and no kernel merge
+mutates its inputs, so each prefix union, Bloom expectation-unions in
+floating point included, is bit-identical. Estimators that are not a fold of
+the raw states (sequential VoC, MetaVoc, denoised ADBF, stratified) stay
+plain callables, called once per prefix.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
-from functools import partial
+from functools import partial, reduce
 
 import numpy as np
 
@@ -22,15 +33,12 @@ from cardinality_estimation_evaluation_framework_spark.simulation.configs import
 from cardinality_estimation_evaluation_framework_spark.sketches.bloom import (
     BloomKernel,
     first_moment_estimate,
-    union_states,
 )
 from cardinality_estimation_evaluation_framework_spark.sketches.cascading_legions import (
     CascadingLegionsKernel,
 )
 from cardinality_estimation_evaluation_framework_spark.sketches.exact import (
     ExactMultiSetKernel,
-    less_one_estimate,
-    lossless_estimate,
 )
 from cardinality_estimation_evaluation_framework_spark.sketches.fll import FllKernel
 from cardinality_estimation_evaluation_framework_spark.sketches.hll import HllKernel
@@ -50,28 +58,44 @@ from cardinality_estimation_evaluation_framework_spark.sketches.vector_of_counts
 )
 
 
-def _merge_and_estimate(kernel, states):
-    acc = states[0]
-    for st in states[1:]:
-        acc = kernel.merge(acc, st)
-    return kernel.estimate(acc)
+class UnionEstimator:
+    """Fold-then-finalize estimator: ``finalize(kernel, union)`` of the
+    left-folded union of the states (see the module docstring)."""
+
+    def __init__(self, finalize):
+        self.finalize = finalize
+
+    def __call__(self, kernel, states):
+        return self.finalize(kernel, reduce(kernel.merge, states))
+
+    def prefixes(self, kernel, states):
+        return [self.finalize(kernel, union)
+                for union in itertools.accumulate(states, kernel.merge)]
 
 
-def _adbf_first_moment(method, denoiser=None):
-    def estimator(kernel, states):
-        if denoiser is not None:
-            states = denoiser(states)
-        union = union_states(kernel, states)
-        return [first_moment_estimate(kernel, union, method=method)]
+#: the kernel's own estimate of the union (HLL, FLL, legions)
+KERNEL_ESTIMATE = UnionEstimator(lambda kernel, union: kernel.estimate(union))
 
-    return estimator
+
+def lossless_estimator(max_frequency: int, offset: int = 0) -> UnionEstimator:
+    """Exact k+ histogram of the union (``offset=1``: LessOne)."""
+    return UnionEstimator(lambda kernel, union: [
+        float(x) - offset for x in kernel.frequency_histogram(union, max_frequency)])
+
+
+def first_moment_estimator(method, denoiser=None):
+    """ADBF first moment of the union. With a denoiser it is a plain
+    callable: the union of denoised states is no fold of the raw states."""
+    est = UnionEstimator(
+        lambda kernel, union: [first_moment_estimate(kernel, union, method=method)])
+    return est if denoiser is None else (lambda kernel, states: est(kernel, denoiser(states)))
 
 
 def exact_set_lossless(max_frequency: int = 1) -> SketchEstimatorConfig:
     return SketchEstimatorConfig(
         name="exact_set-infty-lossless-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: ExactMultiSetKernel(),
-        estimator=lambda kernel, states: lossless_estimate(states, max_frequency),
+        estimator=lossless_estimator(max_frequency),
         max_frequency=max_frequency,
     )
 
@@ -81,7 +105,7 @@ def exact_set_less_one(max_frequency: int = 1) -> SketchEstimatorConfig:
     return SketchEstimatorConfig(
         name="exact_set-infty-less_one-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: ExactMultiSetKernel(),
-        estimator=lambda kernel, states: less_one_estimate(states, max_frequency),
+        estimator=lossless_estimator(max_frequency, offset=1),
         max_frequency=max_frequency,
     )
 
@@ -90,7 +114,7 @@ def hll_plus_plus(p: int = 14) -> SketchEstimatorConfig:
     return SketchEstimatorConfig(
         name=f"hyper_log_log-{2**p}-hll_cardinality-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: HllKernel(p=p, seed=seed),
-        estimator=_merge_and_estimate,
+        estimator=KERNEL_ESTIMATE,
     )
 
 
@@ -98,7 +122,7 @@ def fll_plus_plus(p: int = 14, max_frequency: int = 15) -> SketchEstimatorConfig
     return SketchEstimatorConfig(
         name=f"freq_log_log-{2**p}-fll_cardinality-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: FllKernel(p=p, seed=seed, max_freq=max_frequency),
-        estimator=_merge_and_estimate,
+        estimator=KERNEL_ESTIMATE,
         max_frequency=max_frequency,
     )
 
@@ -118,7 +142,7 @@ def exp_adbf_first_moment(m: int = 100_000, decay_rate: float = 10.0,
         kernel_factory=lambda seed: BloomKernel(
             dist_kind="exponential", m=m, seed=seed, decay_rate=decay_rate
         ),
-        estimator=_adbf_first_moment("exp", denoiser),
+        estimator=first_moment_estimator("exp", denoiser),
         sketch_noiser=noiser,
     )
 
@@ -127,7 +151,7 @@ def log_adbf_first_moment(m: int = 100_000) -> SketchEstimatorConfig:
     return SketchEstimatorConfig(
         name=f"log_bloom_filter-{m}-first_moment_log-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: BloomKernel(dist_kind="log", m=m, seed=seed),
-        estimator=_adbf_first_moment("log"),
+        estimator=first_moment_estimator("log"),
     )
 
 
@@ -141,7 +165,7 @@ def geo_adbf_first_moment(m: int = 100_000, probability: float | None = None) ->
         kernel_factory=lambda seed: BloomKernel(
             dist_kind="geometric", m=m, seed=seed, probability=probability
         ),
-        estimator=_adbf_first_moment("geo"),
+        estimator=first_moment_estimator("geo"),
     )
 
 
@@ -149,7 +173,7 @@ def uniform_adbf_first_moment(m: int = 100_000) -> SketchEstimatorConfig:
     return SketchEstimatorConfig(
         name=f"uniform_bloom_filter-{m}-first_moment_uniform-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: BloomKernel(dist_kind="uniform", m=m, seed=seed),
-        estimator=_adbf_first_moment("uniform"),
+        estimator=first_moment_estimator("uniform"),
     )
 
 
@@ -165,7 +189,7 @@ def liquid_legions(a: float = 10.0, m: int = 100_000) -> SketchEstimatorConfig:
     return SketchEstimatorConfig(
         name=f"liquid_legions-{a:g}_{m}-sketch_count-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: LiquidLegionsKernel(a=a, m=m, seed=seed),
-        estimator=_merge_and_estimate,
+        estimator=KERNEL_ESTIMATE,
     )
 
 
@@ -173,7 +197,7 @@ def cascading_legions(l: int = 16, m: int = 10_000) -> SketchEstimatorConfig:
     return SketchEstimatorConfig(
         name=f"cascading_legions-{l}_{m}-sketch_count-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: CascadingLegionsKernel(l=l, m=m, seed=seed),
-        estimator=_merge_and_estimate,
+        estimator=KERNEL_ESTIMATE,
     )
 
 
@@ -182,9 +206,8 @@ def same_key_aggregator(m: int = 100_000, decay_rate: float = 10.0,
     return SketchEstimatorConfig(
         name=f"exp_same_key_aggregator-{m}_{decay_rate:g}-standardized_histogram-no_local_dp-no_global_dp",
         kernel_factory=lambda seed: SameKeyAggregatorKernel(m=m, decay_rate=decay_rate, seed=seed),
-        estimator=lambda kernel, states: standardized_histogram_estimate(
-            kernel, _fold(kernel, states), max_freq=max_frequency
-        ),
+        estimator=UnionEstimator(lambda kernel, union: standardized_histogram_estimate(
+            kernel, union, max_freq=max_frequency)),
         max_frequency=max_frequency,
     )
 
@@ -211,16 +234,9 @@ def exp_adbf_global_dp(m: int = 100_000, decay_rate: float = 10.0,
         kernel_factory=lambda seed: BloomKernel(
             dist_kind="exponential", m=m, seed=seed, decay_rate=decay_rate
         ),
-        estimator=_adbf_first_moment("exp"),
+        estimator=first_moment_estimator("exp"),
         estimate_noiser=lambda rng: GeometricEstimateNoiser(epsilon, rng),
     )
-
-
-def _fold(kernel, states):
-    acc = states[0]
-    for st in states[1:]:
-        acc = kernel.merge(acc, st)
-    return acc
 
 
 ESTIMATOR_CONFIGS = {

@@ -5,6 +5,11 @@ Column contract matches the reference exactly (num_sets,
 estimated_cardinality_i, true_cardinality_i, relative_error_i, run_index,
 shuffle_distance) so the analyzer metrics are comparable number-for-number.
 
+Row i of a run estimates the union of the first i sets. An estimator with
+``prefixes(kernel, states)`` gives all k rows from one left fold; any other is
+called on each slice ``states[:i]``. The rows are bit-identical either way
+(same merge order, merges never mutate; see estimators.py).
+
 Two build modes:
 - driver (default): kernels run in-process on the generated numpy sets.
   Scenario sizes in the reference's grids are <= 1e7 ids — the simulation
@@ -121,12 +126,17 @@ class Simulator:
             if self.config.estimate_noiser
             else None
         )
+        estimator = self.config.estimator
+        if hasattr(estimator, "prefixes"):
+            estimates = estimator.prefixes(kernel, states)
+        else:
+            estimates = [estimator(kernel, states[: i + 1]) for i in range(len(states))]
         exact = ExactMultiSetKernel()
         truth_state = exact.empty()
         max_freq = self.config.max_frequency
         metrics = []
-        for i in range(len(states)):
-            est = extend_histogram(self.config.estimator(kernel, states[: i + 1]), max_freq)
+        for i, est in enumerate(estimates):
+            est = extend_histogram(est, max_freq)
             if estimate_noiser:
                 est = [estimate_noiser(float(e)) for e in est]
             truth_state = exact.update(truth_state, sets[i])

@@ -48,7 +48,8 @@ _ENCODE_MIN_SIZE = 1024
 def _write_array(buf: io.BytesIO, arr: np.ndarray) -> None:
     arr = np.ascontiguousarray(arr)
     if arr.size >= _ENCODE_MIN_SIZE and arr.dtype == np.float64:
-        if ((arr == 0.0) | (arr == 1.0)).all():
+        # -0.0 == 0.0, but a bit-packed -0.0 would decode as +0.0
+        if ((arr == 0.0) | (arr == 1.0)).all() and not np.signbit(arr).any():
             buf.write(bytes([_TAG_BITS]))
             np.save(buf, np.asarray(arr.shape, dtype=np.int64),
                     allow_pickle=False)

@@ -11,6 +11,7 @@ Two forms:
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Any
 
 import numpy as np
@@ -20,6 +21,17 @@ from cardinality_estimation_evaluation_framework_spark.sketches.base import (
     SketchKernel,
     State,
 )
+
+
+def _collapse(ids: np.ndarray, counts: np.ndarray, kind: str = "quicksort") -> State:
+    """Sum the counts of equal ids: one sort, then a segmented sum. A stable
+    sort (timsort) is linear on the two sorted runs a merge concatenates."""
+    if len(ids) == 0:
+        return {"ids": ids, "counts": counts}
+    order = np.argsort(ids, kind=kind)
+    ids, counts = ids[order], counts[order]
+    starts = np.flatnonzero(np.concatenate(([True], ids[1:] != ids[:-1])))
+    return {"ids": ids[starts], "counts": np.add.reduceat(counts, starts)}
 
 
 class ExactMultiSetKernel(SketchKernel):
@@ -40,18 +52,13 @@ class ExactMultiSetKernel(SketchKernel):
     def update(self, state: State, values: np.ndarray) -> State:
         if len(values) == 0:
             return state
-        ids, counts = np.unique(values.astype(np.int64), return_counts=True)
-        return self.merge(state, {"ids": ids, "counts": counts})
+        values = values.astype(np.int64)
+        return _collapse(np.concatenate((state["ids"], values)),
+                         np.concatenate((state["counts"], np.ones(len(values), np.int64))))
 
     def merge(self, a: State, b: State) -> State:
-        ids = np.concatenate((a["ids"], b["ids"]))
-        counts = np.concatenate((a["counts"], b["counts"]))
-        if len(ids) == 0:
-            return {"ids": ids, "counts": counts}
-        uniq, inv = np.unique(ids, return_inverse=True)
-        summed = np.zeros(len(uniq), dtype=np.int64)
-        np.add.at(summed, inv, counts)
-        return {"ids": uniq, "counts": summed}
+        return _collapse(np.concatenate((a["ids"], b["ids"])),
+                         np.concatenate((a["counts"], b["counts"])), kind="stable")
 
     def frequency_histogram(self, state: State, max_freq: int | None = None) -> np.ndarray:
         """h[k-1] = #ids with freq >= k (cumulative, ref: exact_set.py:69-98).
@@ -71,10 +78,7 @@ class ExactMultiSetKernel(SketchKernel):
 def lossless_estimate(states: list[State], max_freq: int | None = None) -> list[float]:
     """Union ExactMultiSets then cumulative histogram (ref: exact_set.py:69-98)."""
     k = ExactMultiSetKernel()
-    acc = states[0]
-    for s in states[1:]:
-        acc = k.merge(acc, s)
-    return [float(x) for x in k.frequency_histogram(acc, max_freq)]
+    return [float(x) for x in k.frequency_histogram(reduce(k.merge, states), max_freq)]
 
 
 def less_one_estimate(states: list[State], max_freq: int | None = None) -> list[float]:

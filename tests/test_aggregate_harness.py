@@ -82,6 +82,46 @@ def test_grouped_sketch_null_key(spark):
     assert (got["registers"] == local["registers"]).all()
 
 
+def test_grouped_sketch_multi_key_null(spark):
+    # two key columns, the first partly NULL: the MultiIndex path must keep
+    # (NULL, g) as its own group per g, never fold it into another key
+    n = 30_000
+    df = spark.range(n).select(
+        F.when(F.col("id") % 3 == 0, None)
+        .otherwise((F.col("id") % 3).cast("string"))
+        .alias("src"),
+        (F.col("id") % 2).cast("string").alias("grp"),
+        F.col("id").alias("item"),
+    )
+    k = HllKernel(p=12, seed=7)
+    rows = agg.grouped_sketch(df, k, ["src", "grp"], "item").collect()
+    got = {(r["src"], r["grp"]): (r["rows"], k.unpack(bytes(r["sketch"]))) for r in rows}
+    ids = np.arange(n, dtype=np.int64)
+    expected = {}
+    for s in (0, 1, 2):
+        for g in (0, 1):
+            key = (None if s == 0 else str(s), str(g))
+            expected[key] = ids[(ids % 3 == s) & (ids % 2 == g)]
+    assert set(got) == set(expected)
+    for key, items in expected.items():
+        n_rows, state = got[key]
+        assert n_rows == len(items), key
+        local = k.update(k.empty(), items)
+        assert (state["registers"] == local["registers"]).all(), key
+    # first key all NULL: one group per value of the second key
+    df_null = spark.range(6_000).select(
+        F.lit(None).cast("string").alias("src"),
+        (F.col("id") % 2).cast("string").alias("grp"),
+        F.col("id").alias("item"),
+    )
+    rows = agg.grouped_sketch(df_null, k, ["src", "grp"], "item").collect()
+    assert sorted((r["src"], r["grp"]) for r in rows) == [(None, "0"), (None, "1")]
+    for r in rows:
+        items = np.arange(int(r["grp"]), 6_000, 2, dtype=np.int64)
+        local = k.update(k.empty(), items)
+        assert (k.unpack(bytes(r["sketch"]))["registers"] == local["registers"]).all()
+
+
 def test_empty_input(spark):
     df = spark.range(0).select(F.col("id").alias("item"))
     k = HllKernel(p=10, seed=0)

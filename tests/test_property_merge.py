@@ -4,11 +4,14 @@ single-pass build for ANY partitioning of ANY input — the algebraic
 contract the distributed tree merge relies on (beyond the fixed-seed cases
 in the unit tests)."""
 
+from collections import Counter
+
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from cardinality_estimation_evaluation_framework_spark.sketches.bloom import BloomKernel
 from cardinality_estimation_evaluation_framework_spark.sketches.countmin import CountMinKernel
+from cardinality_estimation_evaluation_framework_spark.sketches.exact import ExactMultiSetKernel
 from cardinality_estimation_evaluation_framework_spark.sketches.fll import FllKernel
 from cardinality_estimation_evaluation_framework_spark.sketches.hll import HllKernel
 from cardinality_estimation_evaluation_framework_spark.sketches.liquid_legions import (
@@ -67,3 +70,34 @@ def test_any_partitioning_matches_single_pass(xs, cut):
         left = k.update(k.empty(), ids[:cut])
         right = k.update(k.empty(), ids[cut:])
         assert _eq(whole, k.merge(left, right)), type(k).__name__
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    chunks=st.lists(
+        st.lists(st.integers(min_value=-(2**62), max_value=2**62) | st.integers(0, 20),
+                 max_size=60),
+        min_size=1, max_size=5),
+    split=st.integers(min_value=0, max_value=5),
+)
+def test_exact_multiset_matches_counter(chunks, split):
+    # update (raw values) and merge (states) against a Counter oracle: ids
+    # strictly sorted, int64 counts summed exactly, inputs left untouched
+    k = ExactMultiSetKernel()
+    split = min(split, len(chunks))
+    left = k.empty()
+    for c in chunks[:split]:
+        left = k.update(left, np.asarray(c, dtype=np.int64))
+    parts = [k.update(k.empty(), np.asarray(c, dtype=np.int64)) for c in chunks[split:]]
+    copies = [{name: arr.copy() for name, arr in p.items()} for p in parts]
+    state = left
+    for p in parts:
+        state = k.merge(state, p)
+    assert all(_eq(p, c) for p, c in zip(parts, copies))
+    oracle = Counter(x for c in chunks for x in c)
+    assert state["ids"].dtype == np.int64 and state["counts"].dtype == np.int64
+    assert (np.diff(state["ids"]) > 0).all()
+    assert dict(zip(state["ids"].tolist(), state["counts"].tolist())) == oracle
+    assert k.frequency_histogram(state).tolist() == [
+        sum(1 for v in oracle.values() if v >= f)
+        for f in range(1, max(oracle.values(), default=0) + 1)]

@@ -1,3 +1,6 @@
+import dataclasses
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -9,6 +12,7 @@ from cardinality_estimation_evaluation_framework_spark.simulation.configs import
 )
 from cardinality_estimation_evaluation_framework_spark.simulation.estimators import (
     ESTIMATOR_CONFIGS,
+    UnionEstimator,
     exact_set_less_one,
     exact_set_lossless,
     exp_adbf_first_moment,
@@ -34,6 +38,52 @@ def test_choice_fast_properties():
     pool = np.arange(500, 600)
     s2 = sg.choice_fast(pool, 10, rs)
     assert np.isin(s2, pool).all()
+
+
+def _choice_fast_golden_cases():
+    for seed in (0, 1, 7):
+        for n, m in ((1000, 0), (1000, 1000), (1000, 200), (40_000, 8_000), (1, 1),
+                     (7, 7), (10**6, 500)):
+            yield n, m, seed
+        yield np.arange(500, 1500), 1000, seed
+        yield np.random.RandomState(seed + 100).randint(0, 10**9, 3000), 600, seed
+
+
+def test_choice_fast_golden_digest():
+    # recorded from the pre-vectorization implementation (a per-element
+    # set.add loop); the multiset and subset generators consume the output
+    # ORDER, so the exact arrays, not only the sets, must not change
+    h = hashlib.sha256()
+    for n, m, seed in _choice_fast_golden_cases():
+        out = np.asarray(sg.choice_fast(n, m, np.random.RandomState(seed)), dtype=np.int64)
+        assert len(out) == m and len(np.unique(out)) == m
+        h.update(len(out).to_bytes(8, "little") + out.tobytes())
+    assert h.hexdigest() == "f93821fb9acd8b66bcd902d01d386a1c6b866c6adfd60080f4c0c41d4195f13b"
+
+
+def _choice_fast_loop(n, m, rs):
+    """Reference: Floyd's algorithm as a per-element set.add loop."""
+    pool = None if isinstance(n, int) else np.asarray(n)
+    size = n if pool is None else len(pool)
+    draws = (rs.random_sample(m) * np.arange(size - m + 1, size + 1)).astype(np.int64)
+    chosen = set()
+    for j in range(m):
+        t = int(draws[j])
+        chosen.add(size - m + j if t in chosen else t)
+    idx = np.fromiter(chosen, np.int64, m)
+    return idx if pool is None else pool[idx]
+
+
+def test_choice_fast_matches_loop_reference():
+    rs = np.random.RandomState(11)
+    for _ in range(300):
+        n = int(rs.randint(1, 400))
+        m = int(rs.randint(0, n + 1))
+        seed = int(rs.randint(2**31 - 1))
+        src = n if rs.rand() < 0.5 else rs.randint(0, 10**9, n)
+        want = _choice_fast_loop(src, m, np.random.RandomState(seed))
+        got = sg.choice_fast(src, m, np.random.RandomState(seed))
+        assert got.dtype == want.dtype and np.array_equal(got, want), (n, m, seed)
 
 
 def test_generators_shapes_and_semantics():
@@ -137,6 +187,68 @@ def test_simulator_seed_reproducibility():
         )()[0]
     a, b = run(), run()
     assert (a["estimated_cardinality_1"] == b["estimated_cardinality_1"]).all()
+
+
+#: configs whose estimator folds then finalizes, so run_one takes the
+#: one-fold prefix path; the rest stay plain per-prefix callables
+PREFIX_PATH_CONFIGS = {
+    "exact", "less_one", "hll", "fll", "exp_adbf", "exp_adbf_global_dp", "log_adbf",
+    "geo_adbf", "uniform_adbf", "liquid_legions", "cascading_legions", "ska",
+}
+
+
+def _prefix_and_sliced_runs(cfg, factory, seed=5):
+    """run_one as configured, and with the estimator wrapped in a plain
+    lambda, which has no prefixes method: run_one slices states[:i+1]."""
+    sliced = dataclasses.replace(cfg, estimator=lambda k, sts, f=cfg.estimator: f(k, sts))
+    return [
+        Simulator(
+            num_runs=1, set_generator_factory=factory, sketch_estimator_config=c,
+            sketch_random_state=np.random.RandomState(seed),
+            set_random_state=np.random.RandomState(seed + 1),
+        ).run_one()
+        for c in (cfg, sliced)
+    ]
+
+
+@pytest.mark.parametrize("name", sorted(ESTIMATOR_CONFIGS))
+def test_prefix_path_matches_per_prefix_slices(name):
+    kw = {"m": 10_000} if "adbf" in name or name in ("ska", "meta_voc") else {}
+    cfg = ESTIMATOR_CONFIGS[name](**kw)
+    assert hasattr(cfg.estimator, "prefixes") == (name in PREFIX_PATH_CONFIGS)
+    factory = sg.IndependentSetGenerator.factory_with_num_and_size(20_000, 5, 2_000)
+    a, b = _prefix_and_sliced_runs(cfg, factory)
+    assert len(a) == 5 and a.equals(b)
+
+
+def test_prefix_path_matches_on_multisets():
+    factory = lambda rs: sg.HomogeneousMultiSetGenerator(
+        20_000, [1_500] * 4, [1.0] * 4, rs, freq_cap=5)
+    a, b = _prefix_and_sliced_runs(exact_set_lossless(max_frequency=3), factory)
+    assert a.equals(b)
+    # lossless is exact at every frequency level, 3+ included
+    for level in (1, 2, 3):
+        assert (a[f"estimated_cardinality_{level}"] == a[f"true_cardinality_{level}"]).all()
+    assert (a["true_cardinality_3"] > 0).all()
+
+
+def test_prefix_path_bit_identical_on_fractional_registers():
+    # crisp 0/1 registers union exactly in any order; fractional ones (as
+    # after a denoise) make the floating-point expectation-union depend on
+    # the merge order, which the prefix fold must keep
+    def fractional(kernel, state, rng):
+        return {"registers": state["registers"] * rng.uniform(0.2, 1.0, kernel.m)}
+
+    def register_digest(kernel, union):
+        # sees every bit of every register (48 bits fit a float exactly)
+        digest = hashlib.sha256(union["registers"].tobytes()).digest()
+        return [float(int.from_bytes(digest[:6], "little"))]
+
+    cfg = dataclasses.replace(exp_adbf_first_moment(m=10_000), sketch_noiser=fractional,
+                              estimator=UnionEstimator(register_digest))
+    factory = sg.IndependentSetGenerator.factory_with_num_and_size(20_000, 6, 3_000)
+    a, b = _prefix_and_sliced_runs(cfg, factory)
+    assert a.equals(b)
 
 
 def test_simulator_spark_mode_matches_driver(spark):

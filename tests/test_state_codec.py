@@ -88,3 +88,14 @@ def test_codec_pack_is_deterministic_and_smaller():
     assert raw == pack_state({"t": "x"}, {"registers": regs})
     # 2^20 float64 = 8 MB naive; bit-packed must be ~64x smaller
     assert len(raw) < 200_000
+
+
+def test_codec_keeps_negative_zero():
+    # -0.0 == 0.0 compares true, so a 0/1 check alone would bit-pack it and
+    # decode +0.0; the codec must keep the sign bit (compared as raw bits)
+    regs = np.random.RandomState(3).randint(0, 2, size=4096).astype(np.float64)
+    regs[[0, 17, 4095]] = -0.0
+    back = _roundtrip({"registers": regs})["registers"]
+    assert back.dtype == np.float64
+    np.testing.assert_array_equal(back.view(np.uint64), regs.view(np.uint64))
+    assert np.signbit(back[[0, 17, 4095]]).all()
