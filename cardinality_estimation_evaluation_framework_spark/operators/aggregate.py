@@ -5,15 +5,16 @@ The reference builds one sketch per set by streaming ids through ``add``
 equivalent is a two-phase aggregation that Catalyst cannot derive for Python
 UDAFs, so it is built explicitly (SURVEY §4):
 
-  stage 1 (map side)   : ``mapInPandas`` folds each input partition's Arrow
-                         batches into ONE partial state (or one per group
-                         key — a map-side combine), emitting O(m) bytes per
-                         partition instead of O(rows).
-  stage 2 (reduce side): iterative executor-side tree merge with fanout F —
+  stage 1 (map side)   : ``sketch_partials``, the one stage-1 build: a
+                         ``mapInPandas`` map-side combine over (optional
+                         group keys, scalar or array column) that emits one
+                         partial per (partition, key) — O(m) bytes, not
+                         O(rows). With no keys it is the global sketch.
+  stage 2 (reduce side): executor-side tree merge with fanout F —
                          ``groupBy(gid % width).applyInPandas(merge)`` —
-                         until few enough partials remain to collect;
-                         the driver folds the rest. Depth = ceil(log_F P),
-                         driver traffic O(F * m), never O(P * m).
+                         until few partials remain; the driver folds the
+                         rest. Depth = ceil(log_F P), driver traffic
+                         O(F * m). Grouped: one ``groupBy(keys)`` merge.
 
 Because every kernel's merge is associative + commutative, any partitioning
 and any tree shape produce bit-identical registers (tested in
@@ -35,7 +36,7 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -54,27 +55,39 @@ from cardinality_estimation_evaluation_framework_spark.sketches.base import (
     State,
 )
 
-_PARTIAL_SCHEMA = StructType(
-    [StructField("gid", LongType()), StructField("sketch", BinaryType())]
-)
 
-
-def items_column(df: DataFrame, col: str, input_dtype: str = "int64") -> DataFrame:
-    """Project ``col`` to a single ``item`` column of the kernel's input
-    dtype. Id sketches get int64 (strings hashed JVM-side via xxhash64 so
-    Python never sees raw strings); value sketches (quantiles) get float64."""
+def _project(df: DataFrame, kernel: SketchKernel, col: str, key_cols: list[str]) -> DataFrame:
+    """Project ``(keys..., item)``: the one place that owns the dtype
+    contract. Arrays pass through as one cell per row. Value sketches
+    (quantiles) get float64 with nulls dropped; id sketches get int64, with
+    strings hashed JVM-side via xxhash64 so Python never sees raw strings."""
     dtype = dict(df.dtypes)[col]
     c = F.col(col)
     if dtype.startswith("array"):
-        raise ValueError("explode arrays before sketching (use explode_tokens)")
-    if input_dtype == "float64":
+        return df.select(*key_cols, c.alias("item"))
+    if getattr(kernel, "input_dtype", "int64") == "float64":
         # drop nulls BEFORE the kernel: na_value=0 in the Arrow transfer
         # would silently inject 0.0 into quantile sketches and skew low
         # quantiles — a quantile over the raw column never sees nulls
-        return df.where(c.isNotNull()).select(c.cast("double").alias("item"))
+        return df.where(c.isNotNull()).select(*key_cols, c.cast("double").alias("item"))
     if dtype in ("string", "binary"):
         c = F.xxhash64(c)
-    return df.select(c.cast("long").alias("item"))
+    return df.select(*key_cols, c.cast("long").alias("item"))
+
+
+def _spread(df: DataFrame, input_partitions: int | None = None) -> tuple[DataFrame, int]:
+    """(df, partition count) for stage 1. A 100 TB scan arrives with
+    thousands of splits; a local single-file read arrives with one — spread
+    it to the default parallelism so stage 1 uses every core, or to
+    ``input_partitions`` when given. The count is known here, without an
+    action, and ``tree_merge`` plans its levels from it."""
+    if input_partitions:
+        return df.repartition(input_partitions), input_partitions
+    nparts = df.rdd.getNumPartitions()
+    default_par = df.sparkSession.sparkContext.defaultParallelism
+    if nparts < default_par:
+        return df.repartition(default_par), default_par
+    return df, nparts
 
 
 def explode_tokens(df: DataFrame, tokens_col: str = "tokens", spread: bool = True) -> DataFrame:
@@ -86,9 +99,7 @@ def explode_tokens(df: DataFrame, tokens_col: str = "tokens", spread: bool = Tru
     than a post-explode shuffle of raw tokens would. On a real multi-split
     scan this is a no-op."""
     if spread:
-        sc = df.sparkSession.sparkContext
-        if df.rdd.getNumPartitions() < sc.defaultParallelism:
-            df = df.repartition(sc.defaultParallelism)
+        df, _ = _spread(df)
     return df.select(F.explode(F.col(tokens_col)).alias("_t")).select(
         F.col("_t").cast("long").alias("item")
     )
@@ -100,7 +111,7 @@ def salted_repartition(df: DataFrame, key_col: str, salt_buckets: int = 16,
     rows spread over ``salt_buckets`` tasks (north-rule requirement).
 
     For SKETCH aggregation this is rarely needed — the map-side combine in
-    grouped_sketch_partials already collapses any per-partition key skew to
+    sketch_partials already collapses any per-partition key skew to
     one state — but exact aggregations (counts, joins) over a hot key need
     it, and it also spreads a pathological input placement before stage 1.
     The salt uses a deterministic hash of a per-row sequence, not rand(),
@@ -129,106 +140,117 @@ def salted_exact_counts(df: DataFrame, key_col: str, salt_buckets: int = 16) -> 
     return partial.groupBy(key_col).agg(F.sum("_c").cast("long").alias("count"))
 
 
-def sketch_array_partials(
-    df: DataFrame,
-    kernel: SketchKernel,
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """Stage 1 over an ARRAY column: one Arrow row per document, token
-    arrays flattened inside numpy.
-
-    vs exploding first: the JVM never materializes per-token rows and Arrow
-    transfers one list cell per doc instead of ~n_tok rows — measured ~15%
-    faster on 100-token docs (token payload dominates; row overhead is the
-    smaller term). Values are flattened per batch with np.concatenate and
-    fed to the kernel in one call.
-    """
-    proj = df.select(F.col(tokens_col).alias("tokens"))
-    sc = proj.sparkSession.sparkContext
-    nparts = proj.rdd.getNumPartitions()
-    if nparts < sc.defaultParallelism:
-        nparts = sc.defaultParallelism
-        proj = proj.repartition(nparts)
-    np_dtype = np.float64 if getattr(kernel, "input_dtype", "int64") == "float64" else np.int64
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = kernel.empty()
-        saw = False
-        for pdf in batches:
-            cells = [
-                np.asarray(c) for c in pdf["tokens"].to_numpy() if c is not None and len(c)
-            ]
-            saw = saw or len(pdf) > 0
-            if not cells:
-                continue
-            vals = np.concatenate(cells)
-            kernel.update(state, vals.astype(np_dtype, copy=False))
-        if saw:
-            ctx = TaskContext.get()
-            gid = ctx.partitionId() if ctx is not None else 0
-            yield pd.DataFrame({"gid": [gid], "sketch": [kernel.pack(state)]})
-
-    out = proj.mapInPandas(build, schema=_PARTIAL_SCHEMA)
-    # the partial count is the stage-1 partition count, already known here;
-    # recording it saves tree_merge a driver-side RDD conversion of the
-    # mapInPandas plan (measured ~0.5 s of pure planning per sketch call)
-    out._ceef_nparts = nparts  # type: ignore[attr-defined]
-    return out
-
-
-def sketch_tokens(
-    df: DataFrame,
-    kernel: SketchKernel,
-    tokens_col: str = "tokens",
-    fanout: int = 32,
-) -> State:
-    """Full pipeline over the canonical pre-tokenized table: token arrays →
-    merged sketch state, no explode."""
-    return tree_merge(sketch_array_partials(df, kernel, tokens_col), kernel, fanout)
-
-
 def sketch_partials(
     df: DataFrame,
     kernel: SketchKernel,
     col: str = "item",
+    key_cols: Sequence[str] = (),
     input_partitions: int | None = None,
 ) -> DataFrame:
-    """Stage 1: one packed partial state per input partition."""
-    items = items_column(df, col, getattr(kernel, "input_dtype", "int64"))
-    nparts = items.rdd.getNumPartitions()
-    if input_partitions:
-        items = items.repartition(input_partitions)
-        nparts = input_partitions
-    elif nparts < (default_par := items.sparkSession.sparkContext.defaultParallelism):
-        # a 100 TB scan arrives with thousands of splits; a local single-file
-        # read arrives with one — spread it so stage 1 uses every core
-        items = items.repartition(default_par)
-        nparts = default_par
+    """Stage 1, the map-side combine: one packed partial state per (input
+    partition, group key), or exactly one per input partition when
+    ``key_cols`` is empty (the global sketch). Output columns are
+    ``(keys..., gid, sketch, rows)``: gid is the stage-1 partition id and
+    rows counts the items folded into the state.
 
+    ``col`` may be an array column: Arrow then transfers one list cell per
+    row instead of one row per item, and the cells are flattened inside
+    numpy — vs exploding first, the JVM never materializes per-item rows
+    (measured ~15% faster on 100-token docs).
+    """
+    key_cols = list(key_cols)
+    proj, nparts = _spread(_project(df, kernel, col, key_cols), input_partitions)
+    is_array = dict(proj.dtypes)["item"].startswith("array")
     np_dtype = np.float64 if getattr(kernel, "input_dtype", "int64") == "float64" else np.int64
+    schema = (
+        StructType([proj.schema[k] for k in key_cols])
+        .add("gid", LongType()).add("sketch", BinaryType()).add("rows", LongType())
+    )
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = kernel.empty()
-        saw = False
+        states: dict[tuple, State] = {}
+        counts: dict[tuple, int] = {}
+
+        def fold(key: tuple, vals: np.ndarray) -> None:
+            st = states.get(key)
+            if st is None:
+                st = states[key] = kernel.empty()
+                counts[key] = 0
+            if len(vals):
+                kernel.update(st, vals)
+            counts[key] += len(vals)
+
         for pdf in batches:
-            vals = pdf["item"].to_numpy(dtype=np_dtype, na_value=0)
-            kernel.update(state, vals)
-            saw = True
-        if saw:
+            if not len(pdf):
+                continue
+            if is_array:
+                cells = pdf["item"].to_numpy()
+                full = [c for c in cells if c is not None and len(c)]
+                vals = np.concatenate(full) if full else np.zeros(0, np_dtype)
+                vals = vals.astype(np_dtype, copy=False)
+            else:
+                vals = pdf["item"].to_numpy(dtype=np_dtype, na_value=0)
+            if not key_cols:
+                # the global sketch: the whole batch into one state, no split
+                fold((), vals)
+                continue
+            # vectorized per-key split: sort by key codes, slice runs
+            # (single-key fast path skips the MultiIndex build;
+            # use_na_sentinel=False keeps NULL keys as a real group — the
+            # bare factorize would code them -1, silently folding null-key
+            # rows into uniq[-1], i.e. the wrong key's sketch)
+            if len(key_cols) == 1:
+                codes, uniq = pd.factorize(
+                    pdf[key_cols[0]], sort=False, use_na_sentinel=False
+                )
+            else:
+                codes, uniq = pd.factorize(
+                    pd.MultiIndex.from_frame(pdf[key_cols]), sort=False
+                )
+            if is_array:
+                # one code per flattened item: repeat each row's code by
+                # its cell length (NULL and empty cells contribute none)
+                codes = np.repeat(codes, [0 if c is None else len(c) for c in cells])
+            order = np.argsort(codes, kind="stable")
+            sorted_codes, sorted_vals = codes[order], vals[order]
+            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
+            for s, e in zip(np.r_[0, bounds], np.r_[bounds, len(order)]):
+                if s < e:
+                    key = uniq[sorted_codes[s]]
+                    fold(key if isinstance(key, tuple) else (key,), sorted_vals[s:e])
+        if states:
             ctx = TaskContext.get()
             gid = ctx.partitionId() if ctx is not None else 0
-            yield pd.DataFrame({"gid": [gid], "sketch": [kernel.pack(state)]})
+            out = {k: [key[i] for key in states] for i, k in enumerate(key_cols)}
+            out["gid"] = [gid] * len(states)
+            out["sketch"] = [kernel.pack(st) for st in states.values()]
+            out["rows"] = [counts[key] for key in states]
+            yield pd.DataFrame(out)
 
-    out = items.mapInPandas(build, schema=_PARTIAL_SCHEMA)
-    # known stage-1 partition count — saves tree_merge an RDD conversion
+    out = proj.mapInPandas(build, schema=schema)
+    # a global build's partial count is the stage-1 partition count, known
+    # here; recording it saves tree_merge a driver-side RDD conversion of
+    # the mapInPandas plan (measured ~0.5 s of pure planning per call)
     out._ceef_nparts = nparts  # type: ignore[attr-defined]
     return out
 
 
-def _merge_fn(kernel: SketchKernel):
+def sketch_array_partials(
+    df: DataFrame, kernel: SketchKernel, tokens_col: str = "tokens"
+) -> DataFrame:
+    """``sketch_partials`` of a token-array column."""
+    return sketch_partials(df, kernel, tokens_col)
+
+
+def _merge_fn(kernel: SketchKernel, cols: list[str]):
+    """Merge one group of partials: the first row's ``cols``, the merged
+    state and the summed ``rows``."""
+
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = kernel.merge_packed(list(pdf["sketch"]))
-        return pd.DataFrame({"gid": [int(pdf["gid"].iloc[0])], "sketch": [merged]})
+        out = pdf.iloc[[0]][cols].copy()
+        out["sketch"] = [kernel.merge_packed(list(pdf["sketch"]))]
+        out["rows"] = [int(pdf["rows"].sum())]
+        return out
 
     return merge
 
@@ -255,7 +277,7 @@ def tree_merge(
         cur = (
             cur.withColumn("gid", F.pmod(F.col("gid"), F.lit(width)))
             .groupBy("gid")
-            .applyInPandas(_merge_fn(kernel), schema=_PARTIAL_SCHEMA)
+            .applyInPandas(_merge_fn(kernel, ["gid"]), schema=partials.schema)
         )
         n = width
     # Arrow transfer for the final fetch: packed states are binary blobs
@@ -275,107 +297,31 @@ def sketch(
     input_partitions: int | None = None,
     fanout: int = 32,
 ) -> State:
-    """Full pipeline: df[col] → merged sketch state on the driver."""
+    """Full pipeline: df[col] (scalar or array) → merged state on the driver."""
     return tree_merge(
-        sketch_partials(df, kernel, col, input_partitions), kernel, fanout
+        sketch_partials(df, kernel, col, input_partitions=input_partitions), kernel, fanout
     )
+
+
+def sketch_tokens(
+    df: DataFrame, kernel: SketchKernel, tokens_col: str = "tokens", fanout: int = 32
+) -> State:
+    """``sketch`` of a token-array column."""
+    return sketch(df, kernel, tokens_col, fanout=fanout)
 
 
 # --------------------------------------------------------------------------
 # Grouped sketches: one sketch per key (e.g. per source / per campaign).
 # --------------------------------------------------------------------------
 
-def grouped_sketch_partials(
-    df: DataFrame, kernel: SketchKernel, key_cols: list[str], col: str
-) -> DataFrame:
-    """Map-side combine: per (input partition, key) partial states."""
-    dtype = dict(df.dtypes)[col]
-    item = F.col(col)
-    # mirror items_column's dtype contract exactly: float64 kernels
-    # (KLL/t-digest) take the raw values cast to double (a long cast would
-    # truncate; hashing strings would sketch hash values); id kernels hash
-    # strings JVM-side then go int64
-    in_dtype = getattr(kernel, "input_dtype", "int64")
-    if in_dtype == "float64":
-        # null items are dropped, not zero-filled (see items_column) — the
-        # keys of all-null groups then simply emit no partial, matching
-        # what a per-key quantile over the raw column would produce
-        proj = df.where(item.isNotNull()).select(
-            *key_cols, item.cast("double").alias("item")
-        )
-    else:
-        if dtype in ("string", "binary"):
-            item = F.xxhash64(item)
-        proj = df.select(*key_cols, item.cast("long").alias("item"))
-    default_par = proj.sparkSession.sparkContext.defaultParallelism
-    if proj.rdd.getNumPartitions() < default_par:
-        proj = proj.repartition(default_par)
-    out_schema = StructType(
-        [proj.schema[k] for k in key_cols]
-        + [StructField("sketch", BinaryType()), StructField("rows", LongType())]
-    )
-
-    np_dtype = np.float64 if in_dtype == "float64" else np.int64
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, State] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in batches:
-            vals = pdf["item"].to_numpy(dtype=np_dtype, na_value=0)
-            # vectorized per-key split: sort by key codes, slice runs
-            # (single-key fast path skips the MultiIndex build;
-            # use_na_sentinel=False keeps NULL keys as a real group — the
-            # bare factorize would code them -1, silently folding null-key
-            # rows into uniq[-1], i.e. the wrong key's sketch)
-            if len(key_cols) == 1:
-                codes, uniq = pd.factorize(
-                    pdf[key_cols[0]], sort=False, use_na_sentinel=False
-                )
-            else:
-                codes, uniq = pd.factorize(
-                    pd.MultiIndex.from_frame(pdf[key_cols]), sort=False
-                )
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            sorted_vals = vals[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sorted_codes)]))
-            for s, e in zip(starts, ends):
-                if s == e:
-                    continue
-                key = uniq[sorted_codes[s]]
-                key = key if isinstance(key, tuple) else (key,)
-                st = states.get(key)
-                if st is None:
-                    st = states[key] = kernel.empty()
-                    counts[key] = 0
-                kernel.update(st, sorted_vals[s:e])
-                counts[key] += e - s
-        if states:
-            rows = {k: [key[i] for key in states] for i, k in enumerate(key_cols)}
-            rows["sketch"] = [kernel.pack(st) for st in states.values()]
-            rows["rows"] = [counts[key] for key in states]
-            yield pd.DataFrame(rows)
-
-    return proj.mapInPandas(build, schema=out_schema)
-
-
 def grouped_sketch(
     df: DataFrame, kernel: SketchKernel, key_cols: list[str], col: str = "item"
 ) -> DataFrame:
-    """DataFrame of (key_cols..., sketch binary), one merged state per key."""
-    partials = grouped_sketch_partials(df, kernel, key_cols, col)
-    schema = partials.schema
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = kernel.merge_packed(list(pdf["sketch"]))
-        out = pdf.iloc[[0]][key_cols].copy()
-        out["sketch"] = [merged]
-        out["rows"] = [int(pdf["rows"].sum())]
-        return out
-
-    return partials.groupBy(*key_cols).applyInPandas(merge, schema=schema)
+    """DataFrame of (key_cols..., sketch binary, rows long), one state per key."""
+    partials = sketch_partials(df, kernel, col, key_cols).drop("gid")
+    return partials.groupBy(*key_cols).applyInPandas(
+        _merge_fn(kernel, key_cols), schema=partials.schema
+    )
 
 
 def grouped_estimate(

@@ -217,79 +217,6 @@ def exp_adbf_estimate_sql(items: DataFrame, m: int = 65536,
     return first_moment_estimate(kernel, state, method="exp")
 
 
-def suite_build_sql(items: DataFrame, p: int = 14, cm_width: int = 4096,
-                    cm_depth: int = 4, adbf_m: int = 65536,
-                    adbf_decay: float = 10.0, seed: int = 0,
-                    col: str = "item") -> DataFrame:
-    """HLL + count-min + exp-ADBF in ONE aggregation: every item fans out
-    to (sketch, key) rows and a single counted/max groupBy builds all three
-    register tables — one scan, one (map-side combined) shuffle whose width
-    is bounded by total register count per partition, zero Python.
-
-    Output: (sketch string, r int, bucket int, val long) where val is rho
-    for 'hll', the count for 'cm', and 1 for 'adbf'.
-    """
-    h = _seeded_hash(F.col(col), seed)
-    hll_bucket, rho = _hll_bucket_rho(h, p)
-    adbf_bucket = _adbf_bucket(h, adbf_m, adbf_decay)
-
-    fan = F.explode(
-        F.array(
-            F.struct(
-                F.lit("hll").alias("sketch"), F.lit(0).alias("r"),
-                hll_bucket.alias("bucket"),
-                rho.cast("long").alias("v"),
-            ),
-            F.struct(
-                F.lit("adbf").alias("sketch"), F.lit(0).alias("r"),
-                adbf_bucket.alias("bucket"), F.lit(1).cast("long").alias("v"),
-            ),
-            *[
-                F.struct(
-                    F.lit("cm").alias("sketch"), F.lit(r).alias("r"),
-                    F.pmod(_seeded_hash(F.col(col), seed * 31 + r), F.lit(cm_width))
-                    .cast("int").alias("bucket"),
-                    F.lit(1).cast("long").alias("v"),
-                )
-                for r in range(cm_depth)
-            ],
-        )
-    )
-    fanned = items.select(fan.alias("f")).select("f.sketch", "f.r", "f.bucket", "f.v")
-    return fanned.groupBy("sketch", "r", "bucket").agg(
-        # max == rho-merge for hll; sum == count for cm; max(1)=1 for adbf
-        F.when(F.col("sketch") == "cm", F.sum("v"))
-        .otherwise(F.max("v"))
-        .alias("val")
-    )
-
-
-def suite_states_from_sql(suite_rows: DataFrame, p: int = 14,
-                          cm_width: int = 4096, cm_depth: int = 4,
-                          adbf_m: int = 65536, adbf_decay: float = 10.0,
-                          seed: int = 0) -> dict[str, State]:
-    """Collect suite_build_sql output into kernel States (registers ->
-    estimate-ready), completing the pure-SQL suite path: the returned dict
-    has 'hll' (int8 registers), 'cm' (CountMin table + n inferred from the
-    counts), 'adbf' (0/1 registers)."""
-    hll_regs = np.zeros(1 << p, dtype=np.int8)
-    cm_table = np.zeros((cm_depth, cm_width), dtype=np.int64)
-    adbf_regs = np.zeros(adbf_m, dtype=np.float64)
-    for r in suite_rows.collect():
-        if r["sketch"] == "hll":
-            hll_regs[r["bucket"]] = r["val"]
-        elif r["sketch"] == "cm":
-            cm_table[r["r"], r["bucket"]] = r["val"]
-        else:
-            adbf_regs[r["bucket"]] = 1.0
-    n = int(cm_table[0].sum()) if cm_depth else 0
-    return {
-        "hll": {"registers": hll_regs},
-        "cm": {"table": cm_table, "n": np.array([n], dtype=np.int64)},
-        "adbf": {"registers": adbf_regs},
-    }
-
-
 def hll_registers_by_key_sql(items: DataFrame, keys: list[str], p: int = 14,
                              seed: int = 0, col: str = "item") -> DataFrame:
     """Per-key HLL register tables, entirely JVM-side:

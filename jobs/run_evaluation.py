@@ -1,7 +1,8 @@
 """spark-submit entry point — thin shim over the packaged CLI.
 
-Deploy form (north rule):
-    spark-submit --py-files dist/ceef_spark.zip jobs/run_evaluation.py --...
+Deploy form (north rule; ``./package.sh`` builds the zip, which is not
+kept in git):
+    ./package.sh && spark-submit --py-files dist/ceef_spark.zip jobs/run_evaluation.py --...
 """
 
 import os

@@ -127,3 +127,17 @@ def test_empty_input(spark):
     k = HllKernel(p=10, seed=0)
     state = agg.sketch(df, k)
     assert k.estimate(state)[0] == 0.0
+
+
+def test_global_partials_one_row_per_partition(spark):
+    # a global build emits one partial per stage-1 partition, whose count
+    # tree_merge reads without an action, and rows counts every token
+    toks = F.sequence(F.lit(1), F.col("id") % 13)
+    dp = spark.sparkContext.defaultParallelism
+    for parts in (1, 2 * dp):
+        docs = spark.range(5_000, numPartitions=parts).select(toks.alias("tokens"))
+        partials = agg.sketch_partials(docs, HllKernel(p=10, seed=1), "tokens")
+        assert partials.columns == ["gid", "sketch", "rows"]
+        assert partials.count() == partials._ceef_nparts == max(parts, dp)
+        n_tok = docs.agg(F.sum(F.size("tokens"))).first()[0]
+        assert partials.agg(F.sum("rows")).first()[0] == n_tok

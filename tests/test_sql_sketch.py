@@ -100,28 +100,6 @@ def test_exp_adbf_closed_form_matches_searchsorted(spark):
     assert (expected == got).mean() > 0.999
 
 
-def test_suite_build_sql_one_shuffle_all_sketches(spark, items):
-    suite = sql_sketch.suite_build_sql(
-        items, p=10, cm_width=512, cm_depth=3, adbf_m=4096)
-    rows = suite.collect()
-    sketches = {r["sketch"] for r in rows}
-    assert sketches == {"hll", "cm", "adbf"}
-    # cm counts sum to depth * N
-    cm_total = sum(r["val"] for r in rows if r["sketch"] == "cm")
-    assert cm_total == 3 * items.count()
-    # hll registers match the standalone builder
-    hll_rows = {(r["bucket"], r["val"]) for r in rows if r["sketch"] == "hll"}
-    standalone = {(r["bucket"], r["rho"])
-                  for r in sql_sketch.hll_registers_sql(items, p=10, seed=0).collect()}
-    assert hll_rows == standalone
-    # plan: no Python evals, aggregation present
-    plan = suite._sc._jvm.PythonSQLUtils.explainString(
-        suite._jdf.queryExecution(), "formatted") if False else \
-        suite._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEval" not in plan and "MapInPandas" not in plan
-    assert "HashAggregate" in plan or "ObjectHashAggregate" in plan or "SortAggregate" in plan
-
-
 def test_hll_sql_agrees_with_python_kernel_estimate(spark, items):
     """Two independent hash families (xxhash64 vs splitmix64) must agree
     within the combined HLL error envelope."""
@@ -136,30 +114,6 @@ def test_hll_sql_agrees_with_python_kernel_estimate(spark, items):
     kernel = HllKernel(p=14, seed=0)
     py_est = kernel.estimate(agg.sketch(items, kernel, col="item"))[0]
     assert abs(sql_est - py_est) / py_est < 6 * 1.04 / np.sqrt(2**14)
-
-
-def test_suite_states_from_sql(spark, items):
-    """The collected suite states are estimate-ready and consistent with
-    the standalone builders."""
-    from cardinality_estimation_evaluation_framework_spark.sketches.hll import (
-        THRESHOLD, _alpha,
-    )
-
-    params = dict(p=10, cm_width=512, cm_depth=3, adbf_m=4096)
-    rows = sql_sketch.suite_build_sql(items, **params)
-    states = sql_sketch.suite_states_from_sql(rows, **params)
-    true = items.distinct().count()
-    n = items.count()
-    # hll estimate from the collected registers tracks truth
-    regs = states["hll"]["registers"].astype(np.float64)
-    raw = _alpha(1024) * 1024**2 / float(np.sum(np.exp2(-regs)))
-    assert abs(raw - true) / true < 0.15
-    # cm: n recovered exactly, table row sums equal N
-    assert int(states["cm"]["n"][0]) == n
-    assert all(int(states["cm"]["table"][r].sum()) == n for r in range(3))
-    # adbf occupancy within [1, m]
-    occ = int(states["adbf"]["registers"].sum())
-    assert 0 < occ <= 4096
 
 
 def test_hll_by_key_sql_matches_ungrouped_and_truth(spark):

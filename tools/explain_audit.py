@@ -14,9 +14,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -89,15 +91,16 @@ def main() -> None:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sections: list[tuple[str, str, list[str]]] = []
 
-    # 1. sketch partials: scan → project/explode → ArrowEval; no shuffle
-    items = agg.explode_tokens(tk.tokenize_hashed(docs))
-    partials = agg.sketch_partials(items, HllKernel(p=12, seed=1))
-    # codegen spans appear as "* " node prefixes in formatted explain
+    # 1. sketch partials: scan → tokenize → mapInPandas over the token
+    # arrays; no explode, so one Arrow row per doc, never one per token
+    partials = agg.sketch_partials(tk.tokenize_hashed(docs), HllKernel(p=12, seed=1), "tokens")
+    partials_plan = plan_of(partials)
     sections.append((
-        "sketch partial stage (scan → tokenize → explode → mapInPandas)",
-        plan_of(partials),
-        ["* Generate", "MapInPandas"],
+        "sketch partial stage (scan → tokenize → mapInPandas over token arrays)",
+        partials_plan,
+        ["MapInPandas"],
     ))
+    assert "Generate" not in partials_plan, "the array-form sketch build explodes tokens!"
 
     # 2. column pruning: tokenizer must read only (doc_id, text, source)
     narrow = tk.tokenize_hashed(docs).select("n_tok")
@@ -410,7 +413,7 @@ def main() -> None:
         out.append(f"\n## {title}\n\n" + "\n".join(f"- {c}" for c in checks))
         out.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
         print(title, "->", "; ".join(checks))
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("PLANS.md written;", "ALL OK" if ok_all else "SOME MARKERS MISSING")
 

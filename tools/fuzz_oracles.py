@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import random
+import os
 import sys
 import time
 
@@ -28,8 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from check_oracles import normalize
 
@@ -822,7 +824,7 @@ def main() -> int:
     n_trials = int(sys.argv[1]) if len(sys.argv) > 1 else 60
     master_seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260817
     summary = run(n_trials, master_seed)
-    with open("/root/repo/FUZZ.json", "w") as fh:
+    with open(os.path.join(REPO, "FUZZ.json"), "w") as fh:
         json.dump(summary, fh, indent=1)
     print(f"FUZZ: {summary['n_trials']} trials, {summary['failures']} failures, "
           f"{summary['total_sec']}s -> FUZZ.json")
